@@ -138,7 +138,11 @@ def preview_run(
         id=0, metrics=targets, monitor_expr=monitor_expr, minutes=minutes,
         name="preview", description="preview",
     )
-    row = evaluate_monitors(spark, [spec], metrics, now).collect()[0]
+    results = evaluate_monitors(spark, [spec], metrics, now)
+    try:
+        row = results.collect()[0]
+    finally:
+        results.unpersist()
     return {
         "status": row["status"],
         "message": row["message"],

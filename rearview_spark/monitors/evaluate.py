@@ -238,6 +238,10 @@ def evaluate_monitors(
     The monitors list is config-scale (the reference preloads all jobs
     into its scheduler, Rakefile:4-7) — iterating it on the driver builds
     the plan; no data moves through the driver.
+
+    The returned frame is cached, so its readers (the tick's summary
+    collect and its job_data write) share one evaluation. The caller
+    owns that cache: call ``unpersist()`` on the frame once done with it.
     """
     specs = list(monitors)
     if not specs:
@@ -380,7 +384,7 @@ def evaluate_monitors(
         union = tagged_frames[0]
         for f in tagged_frames[1:]:
             union = union.unionByName(f)
-        # cache: consumed twice (seen-id check + returned frame)
+        # cache: read by the seen-id check below and by the caller
         results = union.groupBy("grp").applyInPandas(_eval_group, RUN_RESULT).cache()
     else:
         results = spark.createDataFrame([], RUN_RESULT)
@@ -396,5 +400,12 @@ def evaluate_monitors(
         rows.append((spec.id, scheduled[spec.id], "error", msg, None, None))
     if rows:
         extra = spark.createDataFrame(rows, RUN_RESULT)
-        results = results.unionByName(extra) if tagged_frames else extra
+        if tagged_frames:
+            # hand the caller ONE cached frame to release: cache the union
+            # from the evaluated cache, then drop the evaluated one
+            evaluated, results = results, results.unionByName(extra).cache()
+            results.count()
+            evaluated.unpersist()
+        else:
+            results = extra
     return results

@@ -8,10 +8,17 @@ db/schema.rb:55,62):
   evaluate -> persist job_data -> status transition + debounce ->
   open/close job_errors -> fan out alerts.
 
-This class drives the same steps with Spark doing every data-touching
-stage in one job per tick. Time is injected (``tick(now)``) so golden
-tests and backtests replay deterministically — the same mechanism serves
-the reference's `to_date` historical runs (db/schema.rb:68).
+This class drives the same steps split into a data plane and a control
+plane. Spark runs the data plane: evaluation of every due monitor
+(``evaluate_monitors``), the tick's one summary collect, and the job_data
+append that carries the graph series. The driver runs the control plane
+with pyarrow: the due-monitor read, the monitors swap with its alert
+outbox, the job_errors rewrite and the dispatch log are config-scale
+tables (see ``store.py``), so they cost no Spark job. A tick with nothing
+due and nothing owed launches no Spark job at all. Time is injected
+(``tick(now)``) so golden tests and backtests replay deterministically —
+the same mechanism serves the reference's `to_date` historical runs
+(db/schema.rb:68).
 """
 
 from __future__ import annotations
@@ -19,14 +26,13 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from rearview_spark.monitors.cron import next_fire
 from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors
 from rearview_spark.monitors.lifecycle import RESOLVED, TRIGGERED, transition
 from rearview_spark.monitors.notify import AlertRouter
 from rearview_spark.monitors.schemas import JOB_ERRORS, MONITORS
-from rearview_spark.monitors.store import JobStore
+from rearview_spark.monitors.store import JobStore, to_arrow
 
 
 class MonitorScheduler:
@@ -45,13 +51,13 @@ class MonitorScheduler:
     # -- due-job selection (R2/R6/R7 access paths) --------------------------
 
     def due_monitors(self, now: dt.datetime) -> list[dict]:
-        rows = (
-            self.store.read("monitors")
-            .filter(F.col("active") & F.col("deleted_at").isNull())
-            .filter(F.col("next_run").isNull() | (F.col("next_run") <= F.lit(now)))
-            .collect()
-        )
-        return [r.asDict() for r in rows]
+        return [
+            m
+            for m in self.store.read_rows("monitors")
+            if m["active"]
+            and m["deleted_at"] is None
+            and (m["next_run"] is None or m["next_run"] <= now)
+        ]
 
     # -- one tick -----------------------------------------------------------
 
@@ -75,15 +81,17 @@ class MonitorScheduler:
         them (re-sending only the unmarked tail).
 
         Result-sink shape (the 10^5-monitor question): the collect below
-        pulls ONE summary row per due monitor — status + graph-point
-        count, never the series data, which stays in the Spark job and
-        lands in job_data via the store writer. That makes the tick's
-        driver traffic O(active monitors), ~100 B/row: 10^5 due monitors
-        collect ~10 MB and iterate a trivial Python loop, comfortably
-        inside one driver. The scale-out past that is sharding ticks by
-        ``pmod(monitor_id, n_shards)`` (each shard an independent
-        scheduler over a disjoint config slice — the CAS key is
-        per-table, so give each shard its own store prefix), NOT a
+        pulls ONE summary row per due monitor — job id, status and
+        message, never the series data, which stays in the cached
+        evaluation result and lands in job_data via the Spark writer. The
+        config tables the tick then rewrites (monitors, job_errors, the
+        outbox) are read and written on the driver with pyarrow. That
+        makes the tick's driver traffic O(active monitors), ~100 B/row:
+        10^5 due monitors collect ~10 MB and iterate a trivial Python
+        loop, comfortably inside one driver. The scale-out past that is
+        sharding ticks by ``pmod(monitor_id, n_shards)`` (each shard an
+        independent scheduler over a disjoint config slice — the CAS key
+        is per-table, so give each shard its own store prefix), NOT a
         foreachBatch rewrite: transitions need read-your-writes against
         the open-error table inside one commit, which a streaming sink
         can't give without re-introducing the same per-shard serial
@@ -98,20 +106,39 @@ class MonitorScheduler:
 
         specs = [MonitorSpec.from_row(r) for r in due]
         results = evaluate_monitors(self.spark, specs, self.metrics, now)
-        by_id = {r["job_id"]: r for r in results.collect()}
+        try:
+            by_id = {
+                r["job_id"]: r
+                for r in results.select("job_id", "status", "message").collect()
+            }
+            self._apply_results(due, by_id, results, monitors_version, now)
+        finally:
+            # the evaluation result is cached for the collect above and
+            # the job_data write; holding it past the tick would pin one
+            # cached relation per tick for the life of the scheduler
+            results.unpersist()
+        n_alerts = self._drain_outbox()
+        return {"ran": len(due), "alerts": n_alerts + stranded}
 
-        # status transitions + debounce (S4/S5) on the driver: due list is
-        # config-scale; the heavy work already happened in the Spark job.
-        errors_df = self.store.read("job_errors")
-        open_errors = {
-            r["job_id"]: r.asDict()
-            for r in errors_df.filter(F.col("status") == TRIGGERED).collect()
-        }
-        new_error_rows: list[tuple] = []
+    def _apply_results(
+        self,
+        due: list[dict],
+        by_id: dict,
+        results: DataFrame,
+        monitors_version: int,
+        now: dt.datetime,
+    ) -> None:
+        """Status transitions + debounce (S4/S5) on the driver — the due
+        list is config-scale and the heavy work already ran in Spark —
+        then the CAS-gated commit of the monitors, job_data and job_errors
+        the tick owes."""
+        errors = self.store.read_rows("job_errors")
+        open_errors = {r["job_id"]: r for r in errors if r["status"] == TRIGGERED}
+        new_error_rows: list[dict] = []
         closed_job_ids: set[int] = set()
         updated_monitors: list[dict] = []
         deferred_alerts: list[tuple] = []
-        next_error_id = (errors_df.agg(F.max("id")).collect()[0][0] or 0) + 1
+        next_error_id = max((r["id"] for r in errors), default=0) + 1
 
         for mon in due:
             res = by_id.get(mon["id"])
@@ -127,11 +154,12 @@ class MonitorScheduler:
                 tr.new_status in ("failed", "error") and mon["id"] not in open_errors
             ):
                 new_error_rows.append(
-                    (
-                        next_error_id, mon["id"], now, now,
-                        res["message"], TRIGGERED,
-                        now if tr.should_alert else None,
-                    )
+                    {
+                        "id": next_error_id, "job_id": mon["id"],
+                        "created_at": now, "updated_at": now,
+                        "message": res["message"], "status": TRIGGERED,
+                        "last_alerted_at": now if tr.should_alert else None,
+                    }
                 )
                 next_error_id += 1
             elif tr.incident == "close":
@@ -165,9 +193,7 @@ class MonitorScheduler:
             outbox=self._outbox_rows(deferred_alerts, now),
         )
         self.store.append_job_data(results, now)  # persist job_data (S8)
-        self._merge_errors(open_errors, new_error_rows, closed_job_ids, now)
-        n_alerts = self._drain_outbox()
-        return {"ran": len(due), "alerts": n_alerts + stranded}
+        self._merge_errors(errors, open_errors, new_error_rows, closed_job_ids, now)
 
     # -- outbox (at-least-once alert delivery) ------------------------------
 
@@ -181,14 +207,15 @@ class MonitorScheduler:
         h = hashlib.md5(f"{job_id}|{fired_at.isoformat()}".encode()).digest()
         return int.from_bytes(h[:8], "big") >> 1
 
-    def _outbox_rows(self, deferred_alerts: list[tuple], now: dt.datetime):
-        from rearview_spark.monitors.schemas import ALERT_OUTBOX
-
-        rows = [
-            (self._alert_id(job_id, now), job_id, alert_keys, message, new_status, now)
+    def _outbox_rows(self, deferred_alerts: list[tuple], now: dt.datetime) -> list[dict]:
+        return [
+            {
+                "id": self._alert_id(job_id, now), "job_id": job_id,
+                "alert_keys": alert_keys, "message": message,
+                "status": new_status, "fired_at": now,
+            }
             for job_id, alert_keys, message, new_status in deferred_alerts
         ]
-        return self.spark.createDataFrame(rows, ALERT_OUTBOX)
 
     def _drain_outbox(self) -> int:
         """Dispatch every pending outbox alert, marking each in the
@@ -210,39 +237,34 @@ class MonitorScheduler:
         self,
         updated: list[dict],
         expect_version: int | None = None,
-        outbox=None,
+        outbox: list[dict] | None = None,
     ) -> None:
-        current = self.store.read("monitors")
-        upd_df = self.spark.createDataFrame(
-            [tuple(m[f.name] for f in MONITORS.fields) for m in updated], MONITORS
+        ids = {m["id"] for m in updated}
+        merged = [m for m in self.store.read_rows("monitors") if m["id"] not in ids]
+        merged += updated
+        self.store.save_monitors(
+            to_arrow(merged, MONITORS), expect_version=expect_version, outbox=outbox
         )
-        ids = [m["id"] for m in updated]
-        merged = current.filter(~F.col("id").isin(ids)).unionByName(upd_df)
-        self.store.save_monitors(merged, expect_version=expect_version, outbox=outbox)
 
     def _merge_errors(
         self,
+        current: list[dict],
         open_errors: dict[int, dict],
-        new_rows: list[tuple],
+        new_rows: list[dict],
         closed_job_ids: set[int],
         now: dt.datetime,
     ) -> None:
-        current = self.store.read("job_errors")
         touched = set(open_errors) | closed_job_ids
         rows = []
-        for r in current.collect():
-            d = r.asDict()
+        for d in current:
             if d["status"] == TRIGGERED and d["job_id"] in closed_job_ids:
-                d["status"] = RESOLVED
-                d["updated_at"] = now
+                d = {**d, "status": RESOLVED, "updated_at": now}
             elif d["status"] == TRIGGERED and d["job_id"] in open_errors:
                 d = open_errors[d["job_id"]]
-            rows.append(tuple(d[f.name] for f in JOB_ERRORS.fields))
+            rows.append(d)
         rows.extend(new_rows)
         if rows or touched:
-            self.store.overwrite(
-                "job_errors", self.spark.createDataFrame(rows, JOB_ERRORS)
-            )
+            self.store.overwrite("job_errors", to_arrow(rows, JOB_ERRORS))
 
     # -- simulated run loop (tests / backtest) ------------------------------
 

@@ -133,9 +133,11 @@ ALERT_OUTBOX = T.StructType(
     ]
 )
 
-# Append-only dispatch log: outbox rows anti-joined against it are the
-# pending set. Marked per-alert AFTER the send, so a crash mid-drain
-# redelivers only the unsent tail.
+# Append-only dispatch log: outbox rows whose id is not in it are the
+# pending set (a driver-side set difference, store.pending_alerts). Marked
+# per alert AFTER the send, one small driver-written parquet file renamed
+# into alert_dispatches/ each, so a crash mid-drain redelivers only the
+# unsent tail and marking costs no Spark job.
 ALERT_DISPATCHES = T.StructType(
     [
         T.StructField("id", T.LongType(), False),

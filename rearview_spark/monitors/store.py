@@ -21,8 +21,20 @@ transactional properties re-created file-system-first (SURVEY.md §4.2 #4):
   (xxhash64(job_id, scheduled_ts)) so a re-run of the same tick writes
   the same ids instead of colliding per-batch counters.
 
-Config tables are dimension-scale: full rewrite per tick is bounded and
-cheap.
+Who writes what. The config tables — ``monitors``, ``job_errors``, the
+``_outbox`` sidecar and the ``alert_dispatches`` log — hold one row per
+monitor, incident or owed alert, so the tick reads and rewrites them on
+the driver with pyarrow (:meth:`JobStore.read_rows`, :func:`to_arrow`).
+A Spark job costs far more in scheduling and planning than the few
+kilobytes such a read or write moves, and the dispatch log alone would
+take one job per alert. Spark writes the data plane — ``job_data``
+appends, whose rows carry every monitor's graph series — and any
+caller-supplied DataFrame, so distributed frames keep the generic
+:class:`~rearview_spark.sources.table_format.TableFormat` contract. Both
+writers produce the same layout (parquet part files under the same
+version dirs), so ``read()`` and every dashboard Spark read see one
+table either way, and stores written before the split stay readable
+(Spark's INT96 timestamps included).
 
 The mechanism is split generic-core / typed-store: the schema-agnostic
 :class:`VersionedParquetTables` is the parquet implementation behind
@@ -39,9 +51,89 @@ import shutil
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from rearview_spark.monitors import schemas
+
+_TS = T.TimestampType()
+
+
+def to_arrow(rows: list[dict], schema: T.StructType) -> pa.Table:
+    """Driver rows (dicts, as :meth:`JobStore.read_rows` returns them) as
+    an Arrow table that Spark reads back exactly as it would read
+    ``createDataFrame(rows, schema)`` written by Spark. Timestamps go
+    through pyspark's own conversion, so a naive datetime means the same
+    instant here as in ``createDataFrame``, and are stored as UTC
+    microseconds (parquet ``TIMESTAMP(MICROS, UTC)``, Spark's
+    ``TimestampType``)."""
+    cols = {}
+    for f in schema.fields:
+        vals = [r[f.name] for r in rows]
+        if not f.nullable and any(v is None for v in vals):
+            raise ValueError(f"{f.name}: None in a non-nullable field")
+        if isinstance(f.dataType, T.TimestampType):
+            micros = pa.array([_TS.toInternal(v) for v in vals], pa.int64())
+            cols[f.name] = micros.cast(pa.timestamp("us", tz="UTC"))
+        else:
+            cols[f.name] = pa.array(vals, to_arrow_type(f.dataType))
+    return pa.table(cols)
+
+
+def _rows(table: pa.Table, schema: T.StructType) -> list[dict]:
+    """Arrow table -> dicts equal to ``[r.asDict() for r in collect()]``
+    under ``schema``. Timestamps of either writer (Spark's INT96 ns,
+    Arrow's UTC micros) become UTC micros and then pyspark's naive
+    local-time datetimes."""
+    cols = []
+    for f in schema.fields:
+        col = table.column(f.name)
+        if isinstance(f.dataType, T.TimestampType):
+            micros = col.cast(pa.timestamp("us", tz=col.type.tz)).cast(pa.int64())
+            cols.append([_TS.fromInternal(v) for v in micros.to_pylist()])
+        elif isinstance(f.dataType, T.MapType):
+            cols.append([None if v is None else dict(v) for v in col.to_pylist()])
+        else:
+            cols.append(col.to_pylist())
+    names = schema.fieldNames()
+    return [dict(zip(names, vals)) for vals in zip(*cols)]
+
+
+def _write_arrow(table: pa.Table, dir_path: Path) -> None:
+    """One part file into ``dir_path``, staged under a dot name (hidden
+    from Spark and pyarrow readers) and renamed in: a reader never sees a
+    half-written file."""
+    dir_path.mkdir(parents=True, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = dir_path / f".{name}.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, dir_path / name)
+
+
+def _write_version(data: DataFrame | pa.Table, dir_path: Path) -> None:
+    if isinstance(data, pa.Table):
+        _write_arrow(data, dir_path)
+    else:
+        data.write.mode("overwrite").parquet(str(dir_path))
+
+
+def _parquet_files(path: Path | None) -> pads.Dataset | None:
+    """The parquet files under ``path`` (``.``/``_``-prefixed names —
+    sidecars, markers, temp files — skipped), or None when there are
+    none."""
+    if path is None or not path.exists():
+        return None
+    files = pads.dataset(path, format="parquet")
+    return files if files.files else None
+
+
+def _read_rows(path: Path | None, schema: T.StructType) -> list[dict]:
+    files = _parquet_files(path)
+    return [] if files is None else _rows(files.to_table(), schema)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -106,12 +198,20 @@ class VersionedParquetTables:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(str(path))
 
-    def append(self, table: str, df: DataFrame, partition_by: tuple = ()) -> None:
-        # Appends target the legacy dir: Spark part-file names are unique
-        # per write, so concurrent appends are additive (never lost), and
+    def append(
+        self, table: str, df: DataFrame | pa.Table, partition_by: tuple = ()
+    ) -> None:
+        # Appends target the legacy dir: part-file names are unique per
+        # write, so concurrent appends are additive (never lost), and
         # versioned overwrite is reserved for the mutable config tables.
         # ``partition_by`` serves partition-pruned append-only stores
-        # (the incremental-dedup pfx= layout).
+        # (the incremental-dedup pfx= layout); an Arrow table is one
+        # driver-written part file, unpartitioned.
+        if isinstance(df, pa.Table):
+            if partition_by:
+                raise ValueError("partition_by needs a Spark DataFrame")
+            _write_arrow(df, self._legacy_path(table))
+            return
         w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -168,11 +268,17 @@ class VersionedParquetTables:
     def overwrite(
         self,
         table: str,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         expect_version: int | None = None,
-        sidecars: dict[str, DataFrame] | None = None,
+        sidecars: dict[str, DataFrame | pa.Table] | None = None,
     ) -> int:
         """Atomic versioned swap; returns the new version number.
+
+        ``df`` and each sidecar are a Spark DataFrame (written by Spark)
+        or a driver-built ``pyarrow.Table`` (written by pyarrow, no Spark
+        job); either lands as parquet part files in the same staging dir,
+        so claim, CAS, fencing, pointer flip and prune do not depend on
+        which writer produced the data.
 
         With ``expect_version`` this is a compare-and-swap: it fails if
         the table has moved since the caller read that version, and the
@@ -206,10 +312,10 @@ class VersionedParquetTables:
         tmp = self.root / f".{table}.CURRENT.{uuid.uuid4().hex}"
         published = False
         try:
-            df.write.mode("overwrite").parquet(str(wdir))
+            _write_version(df, wdir)
             for sub, sdf in (sidecars or {}).items():
                 assert sub.startswith("_"), "sidecar dirs must be underscore-hidden"
-                sdf.write.mode("overwrite").parquet(str(wdir / sub))
+                _write_version(sdf, wdir / sub)
             # Fencing: re-verify we still own the claim IMMEDIATELY before
             # publishing. A reclaimer that stole the claim (TTL expiry
             # during a stalled write) deleted/replaced the claim file, so
@@ -273,25 +379,37 @@ class JobStore(VersionedParquetTables):
     schema map and the reference's typed operations (save_monitors with
     the atomic outbox sidecar, job_data appends, dispatch log)."""
 
+    SCHEMAS = {
+        "monitors": schemas.MONITORS,
+        "job_data": schemas.JOB_DATA,
+        "job_errors": schemas.JOB_ERRORS,
+        "applications": schemas.APPLICATIONS,
+        "users": schemas.USERS,
+    }
+
     def read(self, table: str) -> DataFrame:
-        return self.read_table(
-            table,
-            {
-                "monitors": schemas.MONITORS,
-                "job_data": schemas.JOB_DATA,
-                "job_errors": schemas.JOB_ERRORS,
-                "applications": schemas.APPLICATIONS,
-                "users": schemas.USERS,
-            }[table],
-        )
+        return self.read_table(table, self.SCHEMAS[table])
+
+    def read_rows(self, table: str) -> list[dict]:
+        """A config table's current rows on the driver, read with pyarrow;
+        equal to ``[r.asDict() for r in read(table).collect()]``.
+        ``"_outbox"`` names the current monitors version's alert outbox.
+        ``job_data`` is fact-scale and stays a Spark read."""
+        if table == "job_data":
+            raise ValueError("job_data is fact-scale: read it with read()")
+        if table == "_outbox":
+            _, path = self.current_version("monitors")
+            return _read_rows(path / "_outbox" if path else None, schemas.ALERT_OUTBOX)
+        _, path = self.current_version(table)
+        return _read_rows(path, self.SCHEMAS[table])
 
     # -- typed operations ---------------------------------------------------
 
     def save_monitors(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         expect_version: int | None = None,
-        outbox: DataFrame | None = None,
+        outbox: list[dict] | DataFrame | None = None,
     ) -> int:
         """Swap the monitors table; when ``outbox`` is given, its rows are
         committed in the SAME pointer flip (sidecar ``_outbox``) — the
@@ -304,62 +422,50 @@ class JobStore(VersionedParquetTables):
         crash and the next tick's opening drain — e.g. a user registering
         a monitor — would silently discard the owed alerts, and the
         at-least-once guarantee would hold only if the scheduler were the
-        sole writer (ADVICE r04 #2)."""
-        carried = self._undispatched_outbox()
-        if carried is not None and outbox is not None:
-            outbox = carried.unionByName(outbox).dropDuplicates(["id"])
-        elif carried is not None:
-            outbox = carried
-        sidecars = {"_outbox": outbox} if outbox is not None else None
+        sole writer (ADVICE r04 #2). The outbox is alert-scale, so it is
+        merged and written on the driver; a DataFrame ``outbox`` is
+        collected first."""
+        owed = {r["id"]: r for r in self._pending()}
+        if isinstance(outbox, DataFrame):
+            outbox = [r.asDict() for r in outbox.collect()]
+        for r in outbox or ():
+            owed.setdefault(r["id"], r)
+        sidecars = (
+            {"_outbox": to_arrow(list(owed.values()), schemas.ALERT_OUTBOX)}
+            if owed
+            else None
+        )
         return self.overwrite("monitors", df, expect_version, sidecars=sidecars)
 
-    def _undispatched_outbox(self) -> DataFrame | None:
-        """Pending rows of the current version's outbox, or None when the
-        current version carries no outbox sidecar (the common case — one
-        existence check, no Spark job)."""
-        _, path = self.current_version("monitors")
-        if path is None or not (Path(path) / "_outbox").exists():
-            return None
-        return (
-            self.read_outbox()
-            .dropDuplicates(["id"])
-            .join(self._read_dispatch_log(), "id", "left_anti")
-        )
+    def pending_alerts(self) -> list[dict]:
+        """Outbox rows not yet marked dispatched, oldest first."""
+        return sorted(self._pending(), key=lambda r: (r["fired_at"], r["id"]))
 
-    def read_outbox(self) -> DataFrame:
-        """The current monitors version's alert outbox (empty frame when
-        the version carried none)."""
-        _, path = self.current_version("monitors")
-        if path is not None and (Path(path) / "_outbox").exists():
-            return self.spark.read.schema(schemas.ALERT_OUTBOX).parquet(
-                str(Path(path) / "_outbox")
-            )
-        return self.spark.createDataFrame([], schemas.ALERT_OUTBOX)
+    def _pending(self) -> list[dict]:
+        outbox = self.read_rows("_outbox")
+        if not outbox:
+            return []
+        done = self._dispatched_ids()
+        pending = {}
+        for r in outbox:
+            if r["id"] not in done:
+                pending.setdefault(r["id"], r)
+        return list(pending.values())
 
-    def pending_alerts(self) -> list:
-        """Outbox rows not yet marked dispatched, oldest first. Config
-        scale (bounded by alerts-per-tick), so a driver collect is fine."""
-        from pyspark.sql import functions as F
-
-        dispatched = self._read_dispatch_log()
-        return (
-            self.read_outbox()
-            .dropDuplicates(["id"])
-            .join(dispatched, "id", "left_anti")
-            .orderBy(F.col("fired_at"), F.col("id"))
-            .collect()
-        )
-
-    def _read_dispatch_log(self) -> DataFrame:
-        path = self._legacy_path("alert_dispatches")
-        if path.exists() and any(path.iterdir()):
-            return self.spark.read.schema(schemas.ALERT_DISPATCHES).parquet(str(path))
-        return self.spark.createDataFrame([], schemas.ALERT_DISPATCHES)
+    def _dispatched_ids(self) -> set[int]:
+        # Only the id column: files written by Spark (INT96 timestamps) and
+        # by pyarrow (UTC micros) differ in their dispatched_at type.
+        files = _parquet_files(self._legacy_path("alert_dispatches"))
+        if files is None:
+            return set()
+        return set(files.to_table(columns=["id"]).column("id").to_pylist())
 
     def mark_alert_dispatched(self, alert_id: int, now: dt.datetime) -> None:
+        """Append one dispatch-log row: a single driver-written file,
+        renamed into place, so marking costs no Spark job."""
         self.append(
             "alert_dispatches",
-            self.spark.createDataFrame([(alert_id, now)], schemas.ALERT_DISPATCHES),
+            to_arrow([{"id": alert_id, "dispatched_at": now}], schemas.ALERT_DISPATCHES),
         )
 
     def append_job_data(self, run_results: DataFrame, now: dt.datetime) -> None:

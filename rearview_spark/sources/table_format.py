@@ -43,6 +43,7 @@ from __future__ import annotations
 import abc
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from rearview_spark.monitors.store import (
@@ -81,7 +82,11 @@ class TableFormat(abc.ABC):
         self, table: str, df: DataFrame, expect_version: int | None = None
     ) -> int:
         """Atomic full swap; with ``expect_version`` a compare-and-swap
-        raising :class:`ConcurrentWriteError` when the table moved."""
+        raising :class:`ConcurrentWriteError` when the table moved.
+        ``df`` is a Spark DataFrame, written by Spark, so a distributed
+        frame never passes through the driver. The parquet implementation
+        also takes a driver-built ``pyarrow.Table`` (config-scale rows,
+        written without a Spark job; see ``monitors/store.py``)."""
 
     @abc.abstractmethod
     def current_version(self, table: str) -> int:
@@ -134,7 +139,7 @@ class ParquetTableFormat(TableFormat):
         self._core.append(table, df, partition_by=partition_by)
 
     def overwrite(
-        self, table: str, df: DataFrame, expect_version: int | None = None
+        self, table: str, df: DataFrame | pa.Table, expect_version: int | None = None
     ) -> int:
         return self._core.overwrite(table, df, expect_version=expect_version)
 

@@ -626,6 +626,146 @@ def test_outbox_carried_forward_across_unrelated_saves(spark, tmp_path):
     assert st.pending_alerts() == []
 
 
+def test_crash_mid_drain_redelivers_only_the_unsent_alert(spark, store):
+    """Two alerts owed; the first send succeeds (and is marked), then the
+    process dies before the second. The next tick delivers only the
+    unsent one: marking is per alert, after each send."""
+
+    class DiesOnSecondSend:
+        def __init__(self):
+            self.sent = []
+
+        def send(self, alert):
+            if self.sent:
+                raise RuntimeError("simulated SIGKILL mid-drain")
+            self.sent.append(alert)
+
+    m = make_metrics(spark, {"stats.req": [200.0] * 120})
+    rows = [monitor_row(id=i, cron="*/15 * * * *") for i in (1, 2)]
+    store.save_monitors(spark.createDataFrame(rows, MONITORS))
+    dying = DiesOnSecondSend()
+    with pytest.raises(RuntimeError, match="mid-drain"):
+        MonitorScheduler(spark, store, m, AlertRouter(default=dying)).tick(NOW)
+    assert len(dying.sent) == 1
+    unsent = {1, 2} - {dying.sent[0].job_id}
+    assert {r["job_id"] for r in store.pending_alerts()} == unsent
+
+    # restart one minute later: nothing is due (*/15), the drain runs
+    collector = CollectingNotifier()
+    sched = MonitorScheduler(spark, store, m, AlertRouter(default=collector))
+    assert sched.tick(NOW + dt.timedelta(minutes=1)) == {"ran": 0, "alerts": 1}
+    assert {a.job_id for a in collector.sent} == unsent
+    assert store.pending_alerts() == []
+
+
+def _spark_jobs(spark, group: str, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tick_spark_jobs_do_not_grow_with_alerts(spark, tmp_path):
+    """The control plane (monitors swap, outbox, dispatch log, job_errors)
+    runs on the driver: a tick delivering 5 alerts launches as many Spark
+    jobs as one delivering 1, and a tick with nothing due and nothing owed
+    launches none."""
+    m = make_metrics(spark, {"stats.req": [200.0] * 120})
+
+    def tick_jobs(n_firing: int):
+        st = JobStore(spark, str(tmp_path / f"fire{n_firing}"))
+        rows = [
+            monitor_row(
+                id=i, cron="*/15 * * * *",
+                expr="a.mean() > 100" if i <= n_firing else "a.mean() > 1000",
+            )
+            for i in range(1, 6)
+        ]
+        st.save_monitors(spark.createDataFrame(rows, MONITORS))
+        collector = CollectingNotifier()
+        sched = MonitorScheduler(spark, st, m, AlertRouter(default=collector))
+        jobs = _spark_jobs(spark, f"tick-fire{n_firing}", lambda: sched.tick(NOW))
+        assert len(collector.sent) == n_firing
+        return sched, jobs
+
+    _, one_alert = tick_jobs(1)
+    sched, five_alerts = tick_jobs(5)
+    assert five_alerts == one_alert
+    idle = _spark_jobs(
+        spark, "tick-idle", lambda: sched.tick(NOW + dt.timedelta(minutes=1))
+    )
+    assert idle == 0
+
+
+def test_tick_and_preview_release_the_evaluation_cache(spark, store):
+    from rearview_spark.monitors.dashboard import preview_run
+
+    m = make_metrics(spark, {"stats.req": [200.0] * 120})
+    # monitor 2 has no data: its error row takes evaluate's union path
+    rows = [monitor_row(id=1), monitor_row(id=2, metrics=("stats.none",))]
+    store.save_monitors(spark.createDataFrame(rows, MONITORS))
+    sched = MonitorScheduler(spark, store, m)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    assert sched.tick(NOW)["ran"] == 2
+    assert persistent().size() == before
+    out = preview_run(spark, m, ["stats.req"], "a.mean() > 100", 60, NOW)
+    assert out["status"] == "failed"
+    assert persistent().size() == before
+
+
+@pytest.mark.parametrize("writer", ["spark", "arrow"])
+def test_read_rows_equals_spark_collect(spark, tmp_path, writer):
+    """Driver reads of the config tables equal Spark's collect() for
+    versions written by either writer (Spark: INT96 timestamps; Arrow:
+    UTC micros), with null timestamps, array<string> keys (null, empty,
+    several) and empty tables."""
+    from rearview_spark.monitors.schemas import ALERT_OUTBOX, JOB_ERRORS
+    from rearview_spark.monitors.store import to_arrow
+
+    st = JobStore(spark, str(tmp_path / writer))
+    assert [st.read_rows(t) for t in ("monitors", "job_errors", "_outbox")] == [[], [], []]
+
+    def frame(rows, schema):
+        if writer == "spark":
+            return spark.createDataFrame(rows, schema)
+        return to_arrow([dict(zip(schema.fieldNames(), r)) for r in rows], schema)
+
+    t1 = dt.datetime(2024, 3, 9, 23, 59, 58, 123456)
+    mons = [monitor_row(id=1), monitor_row(id=2, alert_keys=()), monitor_row(id=3)]
+    mons[1] = mons[1][:3] + (t1, t1) + mons[1][5:]  # last_run, next_run set
+    mons[2] = mons[2][:8] + (None,) + mons[2][9:]  # alert_keys null
+    owed = [
+        (11, 1, ["email:a@example.com", "pagerduty:K"], "boom", "failed", t1),
+        (12, 2, None, None, "error", T0),
+    ]
+    errs = [
+        (1, 1, T0, t1, "boom", "triggered", None),
+        (2, 2, T0, T0, None, "resolved", t1),
+    ]
+    st.overwrite("monitors", frame(mons, MONITORS), sidecars={"_outbox": frame(owed, ALERT_OUTBOX)})
+    st.overwrite("job_errors", frame(errs, JOB_ERRORS))
+    _, version_dir = st.current_version("monitors")
+    spark_reads = {
+        "monitors": st.read("monitors"),
+        "job_errors": st.read("job_errors"),
+        "_outbox": spark.read.schema(ALERT_OUTBOX).parquet(str(version_dir / "_outbox")),
+    }
+    for table, df in spark_reads.items():
+        got = sorted(st.read_rows(table), key=lambda r: r["id"])
+        assert got == sorted((r.asDict() for r in df.collect()), key=lambda r: r["id"])
+        assert len(got) in (2, 3)
+    assert st.read_rows("monitors")[1]["alert_keys"] == []
+    assert st.read_rows("monitors")[1]["next_run"] == t1
+
+    st.overwrite("job_errors", frame([], JOB_ERRORS))  # an empty version
+    assert st.read_rows("job_errors") == [] == st.read("job_errors").collect()
+
+
 def _local_http_server():
     """(server, port, received, headers) — tiny live HTTP sink for
     provider-envelope tests; caller shuts it down."""
