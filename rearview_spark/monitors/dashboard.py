@@ -8,8 +8,7 @@ path (:22,:26 — ancestry gem pattern), R11 user-by-email (:87).
 
 All inputs are dimension-scale config tables; every join broadcasts, and
 the one windowed read (latest-per-job) runs over the date-partitioned
-job_data table with partition pruning. For preview latency (§3.2) keep
-the hot metrics window cached via ``preview_cache``.
+job_data table with partition pruning.
 """
 
 from __future__ import annotations
@@ -117,13 +116,6 @@ def dashboard_overview(monitors: DataFrame, job_data: DataFrame, job_errors: Dat
 
 # --- interactive preview (§3.2 — run-without-saving) ------------------------
 
-def preview_cache(metrics: DataFrame, hours: int, now: dt.datetime) -> DataFrame:
-    """Cache the hot trailing window so preview runs are sub-second
-    (BASELINE.json's noted mitigation for interactive latency)."""
-    lo = now - dt.timedelta(hours=hours)
-    return metrics.filter(F.col("ts") >= F.lit(lo)).cache()
-
-
 def preview_run(
     spark: SparkSession,
     metrics: DataFrame,
@@ -138,11 +130,7 @@ def preview_run(
         id=0, metrics=targets, monitor_expr=monitor_expr, minutes=minutes,
         name="preview", description="preview",
     )
-    results = evaluate_monitors(spark, [spec], metrics, now)
-    try:
-        row = results.collect()[0]
-    finally:
-        results.unpersist()
+    row = evaluate_monitors(spark, [spec], metrics, now).collect()[0]
     return {
         "status": row["status"],
         "message": row["message"],

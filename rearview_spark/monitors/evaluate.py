@@ -22,10 +22,13 @@ Statuses (reference state machine, SURVEY.md §2.4 S4 — distinct graphite
 job_errors): 'success' | 'failed' (expr truthy) | 'error' (empty window or
 expression error).
 
-Scale: one Spark job evaluates ALL due monitors — each target's plan is
-tagged (job_id, var) and unioned, so Catalyst sees a single DAG and the
-grouped-map UDF fans out across executors by job_id. Per-job input is
-capped (``max_points_per_job``) before collection into the worker.
+Scale: one Spark job evaluates ALL due monitors. Monitors that share a
+window (same targets, end and length) form one group; each target's plan
+is tagged (group, var) and unioned with one anchor row per group, so
+Catalyst sees a single DAG and the grouped-map UDF fans out across
+executors by group. That UDF makes every result row, the graphite-error
+rows included. Per-group input is capped (``MAX_POINTS_PER_JOB``) before
+evaluation in the worker.
 """
 
 from __future__ import annotations
@@ -66,7 +69,7 @@ SAFE_BUILTINS = {
     "robust_z": _robust_z,
 }
 
-MAX_POINTS_PER_JOB_DEFAULT = 100_000
+MAX_POINTS_PER_JOB = 100_000
 
 EXPR_TIMEOUT_DEFAULT = 5.0
 
@@ -229,19 +232,20 @@ def evaluate_monitors(
     monitors: Iterable[MonitorSpec],
     metrics: DataFrame,
     now: dt.datetime,
-    max_points_per_job: int = MAX_POINTS_PER_JOB_DEFAULT,
     with_graph: bool = True,
 ) -> DataFrame:
-    """Evaluate every monitor's window in ONE Spark job; returns a
-    DataFrame with RUN_RESULT schema.
+    """Evaluate every monitor's window in ONE Spark job; returns a lazy
+    DataFrame with RUN_RESULT schema, one row per monitor.
 
     The monitors list is config-scale (the reference preloads all jobs
     into its scheduler, Rakefile:4-7) — iterating it on the driver builds
     the plan; no data moves through the driver.
 
-    The returned frame is cached, so its readers (the tick's summary
-    collect and its job_data write) share one evaluation. The caller
-    owns that cache: call ``unpersist()`` on the frame once done with it.
+    Every row comes out of the grouped map, the graphite-error rows (a
+    window with no rows, a target that does not compile) included. The
+    frame is not cached: a caller that reads it more than once (the
+    tick's summary collect and its job_data write) caches it and
+    unpersists it when done.
     """
     specs = list(monitors)
     if not specs:
@@ -253,74 +257,67 @@ def evaluate_monitors(
     # *distinct* windows, not monitor count — with fleets of monitors on
     # the same golden metrics (the common production shape) that is the
     # difference between O(monitors) and O(distinct targets) scan work.
-    plan_errors: dict[int, str] = {}
-    scheduled: dict[int, dt.datetime] = {}
     groups: dict[str, list[MonitorSpec]] = {}
     for spec in specs:
         end = spec.to_date or now
-        scheduled[spec.id] = end
         # json.dumps is injective here (targets legally contain commas, so
         # a ','.join key could collide two different metrics lists).
         key = json.dumps([spec.metrics, end.isoformat(), spec.minutes])
         groups.setdefault(key, []).append(spec)
 
     tagged_frames = []
-    group_exprs: dict[str, list[tuple]] = {}
+    group_info: dict[str, tuple[str | None, list[tuple]]] = {}
     for key, members in groups.items():
         lead = members[0]
-        end = scheduled[lead.id]
+        end = lead.to_date or now
         start = end - dt.timedelta(minutes=lead.minutes)
         windowed = window_fetch(metrics, start, end)
-        ok = True
+        frames, plan_error = [], None
         for i, target in enumerate(lead.metrics):
             try:
                 plan = compile_target(target)
-                lb = getattr(plan, "lookback_s", 0)
-                la = getattr(plan, "lookahead_s", 0)
-                if lb or la:
+                if plan.lookback_s or plan.lookahead_s:
                     # timeShift targets need source data OUTSIDE the render
                     # window (Graphite fetches the shifted window): extend
                     # the fetch by the plan's reported bounds, then clamp
                     # the transformed frame back to [start, end].
                     src = window_fetch(
                         metrics,
-                        start - dt.timedelta(seconds=lb),
-                        end + dt.timedelta(seconds=la),
+                        start - dt.timedelta(seconds=plan.lookback_s),
+                        end + dt.timedelta(seconds=plan.lookahead_s),
                     )
                     df = window_fetch(plan(src), start, end)
                 else:
                     df = plan(windowed)
             except Exception as e:  # noqa: BLE001 — bad target -> error status
-                for m in members:
-                    plan_errors[m.id] = f"target {target!r}: {e}"
-                ok = False
+                plan_error = f"target {target!r}: {e}"
                 break
-            tagged_frames.append(
+            frames.append(
                 df.select(
                     F.lit(key).alias("grp"),
                     F.lit(_var_name(i)).alias("var"),
                     "metric", "ts", "value",
                 )
             )
-        if ok:
-            group_exprs[key] = [
-                (
-                    m.id,
-                    m.monitor_expr,
-                    m.description or m.name,
-                    scheduled[m.id].isoformat(),
-                )
-                for m in members
-            ]
+        if plan_error is None:
+            tagged_frames += frames
+        group_info[key] = (
+            plan_error,
+            [(m.id, m.monitor_expr, m.description or m.name, end.isoformat()) for m in members],
+        )
 
-    b_exprs = spark.sparkContext.broadcast(group_exprs)
+    b_groups = spark.sparkContext.broadcast(group_info)
 
     def _eval_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["grp"].iloc[0]
-        members = b_exprs.value[key]
-        if len(pdf) > max_points_per_job:
-            pdf = pdf.sort_values("ts").tail(max_points_per_job)
-        if with_graph:
+        plan_error, members = b_groups.value[pdf["grp"].iloc[0]]
+        pdf = pdf[pdf["var"].notna()]  # drop the group's anchor row
+        if len(pdf) > MAX_POINTS_PER_JOB:
+            pdf = pdf.sort_values("ts").tail(MAX_POINTS_PER_JOB)
+        if pdf.empty:
+            # no rows fetched, or a target did not compile (its group
+            # carries no frames): the graphite-error path, nothing to chart
+            graph_records = None
+        elif with_graph:
             graph = (
                 pdf.sort_values(["var", "metric", "ts"])[["metric", "ts", "value"]]
                 .reset_index(drop=True)
@@ -332,7 +329,7 @@ def evaluate_monitors(
             # that dict conversion + Arrow struct encode dominates the run
             graph_records = []
 
-        has_data = pdf["value"].notna().sum() > 0
+        has_data = pdf["value"].notna().any()
         variables: dict | None = None
         bind_error: str | None = None
         if has_data:
@@ -356,7 +353,9 @@ def evaluate_monitors(
             )
 
         for job_id, expr, label, sched_iso in members:
-            if not has_data:
+            if plan_error is not None:
+                emit(job_id, sched_iso, "error", plan_error, None)
+            elif not has_data:
                 emit(job_id, sched_iso, "error", "no data in window", None)
             elif not expr:
                 emit(job_id, sched_iso, "success", None, None)
@@ -380,32 +379,16 @@ def evaluate_monitors(
                     emit(job_id, sched_iso, "success", None, repr(value))
         return pd.DataFrame(out)
 
-    if tagged_frames:
-        union = tagged_frames[0]
-        for f in tagged_frames[1:]:
-            union = union.unionByName(f)
-        # cache: read by the seen-id check below and by the caller
-        results = union.groupBy("grp").applyInPandas(_eval_group, RUN_RESULT).cache()
-    else:
-        results = spark.createDataFrame([], RUN_RESULT)
-
-    # Monitors whose window produced zero rows never reach the UDF — they
-    # are the reference's graphite-error path. Same for bad targets.
-    rows = []
-    seen = {r["job_id"] for r in results.select("job_id").collect()} if tagged_frames else set()
-    for spec in specs:
-        if spec.id in seen:
-            continue
-        msg = plan_errors.get(spec.id, "no data in window")
-        rows.append((spec.id, scheduled[spec.id], "error", msg, None, None))
-    if rows:
-        extra = spark.createDataFrame(rows, RUN_RESULT)
-        if tagged_frames:
-            # hand the caller ONE cached frame to release: cache the union
-            # from the evaluated cache, then drop the evaluated one
-            evaluated, results = results, results.unionByName(extra).cache()
-            results.count()
-            evaluated.unpersist()
-        else:
-            results = extra
-    return results
+    # One anchor row per group (var NULL) so every group reaches the UDF,
+    # even one whose window fetched nothing or whose target failed to
+    # compile. A literal plan: it runs on the JVM, with no Python task.
+    rows = spark.range(1, numPartitions=1).select(
+        F.explode(F.array(*[F.lit(k) for k in group_info])).alias("grp"),
+        F.lit(None).cast("string").alias("var"),
+        F.lit(None).cast("string").alias("metric"),
+        F.lit(None).cast("timestamp").alias("ts"),
+        F.lit(None).cast("double").alias("value"),
+    )
+    for frame in tagged_frames:
+        rows = rows.unionByName(frame)
+    return rows.groupBy("grp").applyInPandas(_eval_group, RUN_RESULT)

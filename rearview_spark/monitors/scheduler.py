@@ -82,8 +82,10 @@ class MonitorScheduler:
 
         Result-sink shape (the 10^5-monitor question): the collect below
         pulls ONE summary row per due monitor — job id, status and
-        message, never the series data, which stays in the cached
-        evaluation result and lands in job_data via the Spark writer. The
+        message, never the series data. The tick caches the evaluation
+        result, so the collect and the job_data write share one
+        evaluation; the series data stays in that cache, lands in job_data
+        via the Spark writer and is released when the tick ends. The
         config tables the tick then rewrites (monitors, job_errors, the
         outbox) are read and written on the driver with pyarrow. That
         makes the tick's driver traffic O(active monitors), ~100 B/row:
@@ -105,7 +107,7 @@ class MonitorScheduler:
             return {"ran": 0, "alerts": stranded}
 
         specs = [MonitorSpec.from_row(r) for r in due]
-        results = evaluate_monitors(self.spark, specs, self.metrics, now)
+        results = evaluate_monitors(self.spark, specs, self.metrics, now).cache()
         try:
             by_id = {
                 r["job_id"]: r

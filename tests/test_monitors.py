@@ -65,6 +65,7 @@ def test_null_window_is_error(spark):
     out = evaluate_monitors(spark, [spec()], m, NOW).collect()
     assert out[0]["status"] == "error"
     assert "no data" in out[0]["message"]
+    assert out[0]["graph_data"] is None
 
 
 def test_all_null_window_is_error(spark):
@@ -85,6 +86,22 @@ def test_bad_target_is_error(spark):
     out = evaluate_monitors(spark, [spec(metrics=["noSuchFn(stats.req)"])], m, NOW).collect()
     assert out[0]["status"] == "error"
     assert "target" in out[0]["message"]
+    assert out[0]["graph_data"] is None
+
+
+def test_bad_second_target_is_error_beside_healthy_monitor(spark):
+    # the first target compiles and the second does not: the monitor reads
+    # 'error' and the healthy monitor in the same evaluation still runs
+    m = make_metrics(spark, {"stats.req": [200.0] * 61})
+    specs = [
+        spec(id=1),
+        spec(id=2, metrics=["stats.req", "noSuchFn(stats.req)"], expr="a.mean() > b.mean()"),
+    ]
+    out = {r["job_id"]: r for r in evaluate_monitors(spark, specs, m, NOW).collect()}
+    assert out[1]["status"] == "failed"
+    assert out[2]["status"] == "error"
+    assert out[2]["message"].startswith("target 'noSuchFn(stats.req)'")
+    assert out[2]["graph_data"] is None
 
 
 def test_multi_target_binding(spark):
@@ -669,31 +686,36 @@ def _spark_jobs(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _tick_jobs(spark, tmp_path, n_firing: int, extra_rows=()):
+    """Spark jobs of one tick over 5 healthy monitors, ``n_firing`` of
+    them alerting, plus ``extra_rows``; returns (scheduler, jobs, alerts)."""
+    m = make_metrics(spark, {"stats.req": [200.0] * 120})
+    name = f"fire{n_firing}-extra{len(extra_rows)}"
+    st = JobStore(spark, str(tmp_path / name))
+    rows = [
+        monitor_row(
+            id=i, cron="*/15 * * * *",
+            expr="a.mean() > 100" if i <= n_firing else "a.mean() > 1000",
+        )
+        for i in range(1, 6)
+    ]
+    st.save_monitors(spark.createDataFrame(rows + list(extra_rows), MONITORS))
+    collector = CollectingNotifier()
+    sched = MonitorScheduler(spark, st, m, AlertRouter(default=collector))
+    # job groups are per session: name this one after the test's tmp dir
+    jobs = _spark_jobs(spark, f"tick-{tmp_path.name}-{name}", lambda: sched.tick(NOW))
+    return sched, jobs, len(collector.sent)
+
+
 def test_tick_spark_jobs_do_not_grow_with_alerts(spark, tmp_path):
     """The control plane (monitors swap, outbox, dispatch log, job_errors)
     runs on the driver: a tick delivering 5 alerts launches as many Spark
     jobs as one delivering 1, and a tick with nothing due and nothing owed
     launches none."""
-    m = make_metrics(spark, {"stats.req": [200.0] * 120})
-
-    def tick_jobs(n_firing: int):
-        st = JobStore(spark, str(tmp_path / f"fire{n_firing}"))
-        rows = [
-            monitor_row(
-                id=i, cron="*/15 * * * *",
-                expr="a.mean() > 100" if i <= n_firing else "a.mean() > 1000",
-            )
-            for i in range(1, 6)
-        ]
-        st.save_monitors(spark.createDataFrame(rows, MONITORS))
-        collector = CollectingNotifier()
-        sched = MonitorScheduler(spark, st, m, AlertRouter(default=collector))
-        jobs = _spark_jobs(spark, f"tick-fire{n_firing}", lambda: sched.tick(NOW))
-        assert len(collector.sent) == n_firing
-        return sched, jobs
-
-    _, one_alert = tick_jobs(1)
-    sched, five_alerts = tick_jobs(5)
+    _, one_alert, sent = _tick_jobs(spark, tmp_path, 1)
+    assert sent == 1
+    sched, five_alerts, sent = _tick_jobs(spark, tmp_path, 5)
+    assert sent == 5
     assert five_alerts == one_alert
     idle = _spark_jobs(
         spark, "tick-idle", lambda: sched.tick(NOW + dt.timedelta(minutes=1))
@@ -701,11 +723,27 @@ def test_tick_spark_jobs_do_not_grow_with_alerts(spark, tmp_path):
     assert idle == 0
 
 
+def test_tick_spark_jobs_do_not_grow_with_graphite_errors(spark, tmp_path):
+    """Graphite-error monitors (a window with no data, a second target
+    that does not compile) get their rows from the same evaluation as the
+    healthy ones: the tick launches as many Spark jobs as without them."""
+    _, healthy, _ = _tick_jobs(spark, tmp_path, 1)
+    graphite_errors = [
+        monitor_row(id=6, cron="*/15 * * * *", metrics=("stats.none",)),
+        monitor_row(
+            id=7, cron="*/15 * * * *", metrics=("stats.req", "noSuchFn(stats.req)")
+        ),
+    ]
+    _, with_errors, sent = _tick_jobs(spark, tmp_path, 1, graphite_errors)
+    assert sent == 3
+    assert with_errors == healthy
+
+
 def test_tick_and_preview_release_the_evaluation_cache(spark, store):
     from rearview_spark.monitors.dashboard import preview_run
 
     m = make_metrics(spark, {"stats.req": [200.0] * 120})
-    # monitor 2 has no data: its error row takes evaluate's union path
+    # monitor 2 has no data: its window group holds only the anchor row
     rows = [monitor_row(id=1), monitor_row(id=2, metrics=("stats.none",))]
     store.save_monitors(spark.createDataFrame(rows, MONITORS))
     sched = MonitorScheduler(spark, store, m)
@@ -715,6 +753,10 @@ def test_tick_and_preview_release_the_evaluation_cache(spark, store):
     assert persistent().size() == before
     out = preview_run(spark, m, ["stats.req"], "a.mean() > 100", 60, NOW)
     assert out["status"] == "failed"
+    assert persistent().size() == before
+    # a caller that reads the frame once (the gate queries) holds no cache
+    specs = [spec(id=1), spec(id=2, metrics=["stats.none"])]
+    assert len(evaluate_monitors(spark, specs, m, NOW).collect()) == 2
     assert persistent().size() == before
 
 
