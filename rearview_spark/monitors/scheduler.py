@@ -12,13 +12,13 @@ This class drives the same steps split into a data plane and a control
 plane. Spark runs the data plane: evaluation of every due monitor
 (``evaluate_monitors``), the tick's one summary collect, and the job_data
 append that carries the graph series. The driver runs the control plane
-with pyarrow: the due-monitor read, the monitors swap with its alert
-outbox, the job_errors rewrite and the dispatch log are config-scale
-tables (see ``store.py``), so they cost no Spark job. A tick with nothing
-due and nothing owed launches no Spark job at all. Time is injected
-(``tick(now)``) so golden tests and backtests replay deterministically —
-the same mechanism serves the reference's `to_date` historical runs
-(db/schema.rb:68).
+with pyarrow: the due-monitor read, the tick's one commit (the monitors
+swap with its job_errors and alert-outbox sidecars, see ``store.py``)
+and the dispatch log are config-scale, so they cost no Spark job. A tick
+with nothing due and nothing owed launches no Spark job at all. Time is
+injected (``tick(now)``) so golden tests and backtests replay
+deterministically — the same mechanism serves the reference's `to_date`
+historical runs (db/schema.rb:68).
 """
 
 from __future__ import annotations
@@ -31,7 +31,7 @@ from rearview_spark.monitors.cron import next_fire
 from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors
 from rearview_spark.monitors.lifecycle import RESOLVED, TRIGGERED, transition
 from rearview_spark.monitors.notify import AlertRouter
-from rearview_spark.monitors.schemas import JOB_ERRORS, MONITORS
+from rearview_spark.monitors.schemas import MONITORS
 from rearview_spark.monitors.store import JobStore, to_arrow
 
 
@@ -65,20 +65,20 @@ class MonitorScheduler:
         """Run all due monitors once. Returns a summary dict.
 
         Exactly-once under overlapping ticks: the monitors-table version
-        is snapshotted with the due list, and every persist/dispatch
-        happens only AFTER the compare-and-swap on that table succeeds
-        (``_merge_monitors``).  A second tick computed from the same
-        snapshot fails the CAS with ``ConcurrentWriteError`` before it
-        appends job_data or sends any alert — its work is discarded
-        whole, never half-applied.
+        is snapshotted with the due list and the open incidents, and
+        every persist/dispatch happens only AFTER the compare-and-swap on
+        that version succeeds (``_apply_results``).  A second tick
+        computed from the same snapshot fails the CAS with
+        ``ConcurrentWriteError`` before it appends job_data or sends any
+        alert — its work is discarded whole, never half-applied.
 
-        At-least-once alerting across crashes: the alerts a tick owes are
-        committed as an outbox sidecar of the SAME monitors pointer flip
-        that commits their status transitions, then dispatched FROM the
-        outbox (each marked in the dispatch log after its send).  A
-        process death anywhere between the CAS and the last send leaves
-        the owed alerts durable; the next tick's opening drain delivers
-        them (re-sending only the unmarked tail).
+        Crash contract: the tick commits once. Its monitor rows,
+        job_errors rows and owed alerts ride ONE monitors pointer flip,
+        so a process death leaves all or none of them. A death after the
+        commit leaves the owed alerts in the outbox (each is marked in
+        the dispatch log after its send); the next tick's opening drain
+        delivers them, re-sending only the unmarked tail. A death before
+        the job_data append loses that row: ``next_run`` has advanced.
 
         Result-sink shape (the 10^5-monitor question): the collect below
         pulls ONE summary row per due monitor — job id, status and
@@ -87,7 +87,7 @@ class MonitorScheduler:
         evaluation; the series data stays in that cache, lands in job_data
         via the Spark writer and is released when the tick ends. The
         config tables the tick then rewrites (monitors, job_errors, the
-        outbox) are read and written on the driver with pyarrow. That
+        outbox) are read and committed on the driver with pyarrow. That
         makes the tick's driver traffic O(active monitors), ~100 B/row:
         10^5 due monitors collect ~10 MB and iterate a trivial Python
         loop, comfortably inside one driver. The scale-out past that is
@@ -105,6 +105,9 @@ class MonitorScheduler:
         due = self.due_monitors(now)
         if not due:
             return {"ran": 0, "alerts": stranded}
+        # read after the version snapshot, before evaluation: a commit in
+        # between moves the version and fails this tick's CAS
+        errors = self.store.read_rows("job_errors")
 
         specs = [MonitorSpec.from_row(r) for r in due]
         results = evaluate_monitors(self.spark, specs, self.metrics, now).cache()
@@ -113,7 +116,7 @@ class MonitorScheduler:
                 r["job_id"]: r
                 for r in results.select("job_id", "status", "message").collect()
             }
-            self._apply_results(due, by_id, results, monitors_version, now)
+            self._apply_results(due, errors, by_id, results, monitors_version, now)
         finally:
             # the evaluation result is cached for the collect above and
             # the job_data write; holding it past the tick would pin one
@@ -125,6 +128,7 @@ class MonitorScheduler:
     def _apply_results(
         self,
         due: list[dict],
+        errors: list[dict],
         by_id: dict,
         results: DataFrame,
         monitors_version: int,
@@ -132,9 +136,7 @@ class MonitorScheduler:
     ) -> None:
         """Status transitions + debounce (S4/S5) on the driver — the due
         list is config-scale and the heavy work already ran in Spark —
-        then the CAS-gated commit of the monitors, job_data and job_errors
-        the tick owes."""
-        errors = self.store.read_rows("job_errors")
+        then the tick's one CAS-gated commit and its job_data append."""
         open_errors = {r["job_id"]: r for r in errors if r["status"] == TRIGGERED}
         new_error_rows: list[dict] = []
         closed_job_ids: set[int] = set()
@@ -186,16 +188,20 @@ class MonitorScheduler:
         # CAS gate: the monitors swap is the tick's serialization point.
         # An overlapped tick that computed from the same snapshot raises
         # ConcurrentWriteError HERE — before any job_data row is appended
-        # or any alert leaves the process. The owed alerts ride the same
-        # pointer flip as an outbox sidecar, so from this commit onward
-        # they survive a crash (at-least-once).
-        self._merge_monitors(
-            updated_monitors,
+        # or any alert leaves the process. The incidents and the owed
+        # alerts ride the same pointer flip as sidecars, so from this
+        # commit onward they survive a crash together with the statuses.
+        ids = {m["id"] for m in updated_monitors}
+        monitors = [m for m in self.store.read_rows("monitors") if m["id"] not in ids]
+        self.store.save_monitors(
+            to_arrow(monitors + updated_monitors, MONITORS),
             expect_version=monitors_version,
             outbox=self._outbox_rows(deferred_alerts, now),
+            job_errors=self._merge_errors(
+                errors, open_errors, new_error_rows, closed_job_ids, now
+            ),
         )
         self.store.append_job_data(results, now)  # persist job_data (S8)
-        self._merge_errors(errors, open_errors, new_error_rows, closed_job_ids, now)
 
     # -- outbox (at-least-once alert delivery) ------------------------------
 
@@ -232,31 +238,18 @@ class MonitorScheduler:
             self.store.mark_alert_dispatched(row["id"], row["fired_at"])
         return n
 
-    # -- persistence merges (single-writer; see sources/table_format.py
-    #    for the transactional-format deployment mapping) ------------------
+    # -- job_errors merge ----------------------------------------------------
 
-    def _merge_monitors(
-        self,
-        updated: list[dict],
-        expect_version: int | None = None,
-        outbox: list[dict] | None = None,
-    ) -> None:
-        ids = {m["id"] for m in updated}
-        merged = [m for m in self.store.read_rows("monitors") if m["id"] not in ids]
-        merged += updated
-        self.store.save_monitors(
-            to_arrow(merged, MONITORS), expect_version=expect_version, outbox=outbox
-        )
-
+    @staticmethod
     def _merge_errors(
-        self,
         current: list[dict],
         open_errors: dict[int, dict],
         new_rows: list[dict],
         closed_job_ids: set[int],
         now: dt.datetime,
-    ) -> None:
-        touched = set(open_errors) | closed_job_ids
+    ) -> list[dict]:
+        """The job_errors rows after this tick: closed incidents resolved,
+        re-alerted ones bumped, new ones appended."""
         rows = []
         for d in current:
             if d["status"] == TRIGGERED and d["job_id"] in closed_job_ids:
@@ -264,9 +257,7 @@ class MonitorScheduler:
             elif d["status"] == TRIGGERED and d["job_id"] in open_errors:
                 d = open_errors[d["job_id"]]
             rows.append(d)
-        rows.extend(new_rows)
-        if rows or touched:
-            self.store.overwrite("job_errors", to_arrow(rows, JOB_ERRORS))
+        return rows + new_rows
 
     # -- simulated run loop (tests / backtest) ------------------------------
 

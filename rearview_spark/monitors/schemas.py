@@ -77,7 +77,10 @@ JOB_DATA = T.StructType(
     ]
 )
 
-# job_errors — db/schema.rb:38-48
+# job_errors — db/schema.rb:38-48. Stored as the ``_job_errors`` sidecar
+# of each monitors version (store.save_monitors job_errors=), so a tick's
+# incident opens/closes commit in the same pointer flip as its status
+# transitions, as the reference commits them in one transaction.
 JOB_ERRORS = T.StructType(
     [
         T.StructField("id", T.LongType(), False),
@@ -118,10 +121,11 @@ USERS = T.StructType(
     ]
 )
 
-# Pending-alert outbox row: written as a sidecar of the SAME versioned
-# monitors swap that commits the status transitions (store.save_monitors
-# outbox=), so a crash between the CAS and dispatch can never lose an
-# alert — the next tick drains it (at-least-once, notify.py's contract).
+# Pending-alert outbox row: written as the ``_outbox`` sidecar of the SAME
+# versioned monitors swap that commits the status transitions and
+# job_errors (store.save_monitors outbox=), so a crash between the CAS and
+# dispatch can never lose an alert — the next tick drains it
+# (at-least-once, notify.py's contract).
 ALERT_OUTBOX = T.StructType(
     [
         T.StructField("id", T.LongType(), False),  # deterministic (job_id, fired_at) hash

@@ -22,24 +22,31 @@ transactional properties re-created file-system-first (SURVEY.md §4.2 #4):
   the same ids instead of colliding per-batch counters.
 
 Who writes what. The config tables — ``monitors``, ``job_errors``, the
-``_outbox`` sidecar and the ``alert_dispatches`` log — hold one row per
-monitor, incident or owed alert, so the tick reads and rewrites them on
+``_outbox`` of owed alerts and the ``alert_dispatches`` log — hold one row
+per monitor, incident or owed alert, so the tick reads and rewrites them on
 the driver with pyarrow (:meth:`JobStore.read_rows`, :func:`to_arrow`).
 A Spark job costs far more in scheduling and planning than the few
 kilobytes such a read or write moves, and the dispatch log alone would
 take one job per alert. Spark writes the data plane — ``job_data``
 appends, whose rows carry every monitor's graph series — and any
-caller-supplied DataFrame, so distributed frames keep the generic
-:class:`~rearview_spark.sources.table_format.TableFormat` contract. Both
-writers produce the same layout (parquet part files under the same
-version dirs), so ``read()`` and every dashboard Spark read see one
-table either way, and stores written before the split stay readable
-(Spark's INT96 timestamps included).
+caller-supplied DataFrame. Both writers produce the same layout (parquet
+part files under the same version dirs), so ``read()`` and every
+dashboard Spark read see one table either way, and stores written before
+the split stay readable (Spark's INT96 timestamps included).
+
+One commit per tick. ``job_errors`` and the outbox are the
+``_job_errors`` and ``_outbox`` sidecars of the monitors version, so ONE
+claim and ONE ``CURRENT`` flip commit a tick's status changes, incidents
+and owed alerts — the one transaction the reference wraps them in. A
+commit not given incidents or alerts carries the current ones forward,
+so a user's monitor edit drops neither. A store written before
+``_job_errors`` existed serves its old ``job_errors`` table until the
+first commit carries it in.
 
 The mechanism is split generic-core / typed-store: the schema-agnostic
-:class:`VersionedParquetTables` is the parquet implementation behind
-``rearview_spark.sources.table_format`` (the single place the
-Delta/Iceberg deployment swap is documented); :class:`JobStore` adds the
+:class:`VersionedParquetTables` is the parquet implementation of the
+``rearview_spark.sources.table_format`` contract (whose module docstring
+maps it onto a transactional table format); :class:`JobStore` adds the
 monitor schemas and the reference's typed operations on top.
 """
 
@@ -145,9 +152,8 @@ class VersionedParquetTables:
     """Schema-agnostic core of the versioned-parquet mechanism: the
     CURRENT-pointer swap, O_EXCL claim/CAS, TTL orphan reclaim, staging
     dirs, sidecars, and pruning documented in the module docstring.
-    This is the in-sandbox implementation of the transactional-table
-    contract (`rearview_spark.sources.table_format.TableFormat`) — the
-    one place the Delta/Iceberg deployment boundary is named; every
+    This is the parquet implementation of the transactional-table
+    contract (`rearview_spark.sources.table_format.TableFormat`); every
     crash/replay test that drives :class:`JobStore` exercises exactly
     this class's machinery."""
 
@@ -289,8 +295,8 @@ class VersionedParquetTables:
         written INSIDE the new version dir before the pointer swap — the
         pointer flip commits table + sidecars atomically together (the
         underscore prefix hides them from the table's own parquet read).
-        The scheduler uses this to make the pending-alert outbox part of
-        the same committed write as the status transitions.
+        :class:`JobStore` commits job_errors and the pending-alert outbox
+        this way, in the same write as the monitor rows.
         """
         cur, _ = self.current_version(table)
         if expect_version is not None and cur != expect_version:
@@ -376,16 +382,30 @@ class VersionedParquetTables:
 
 class JobStore(VersionedParquetTables):
     """Monitor-table persistence: the generic versioned core plus the
-    schema map and the reference's typed operations (save_monitors with
-    the atomic outbox sidecar, job_data appends, dispatch log)."""
+    schema map and the reference's typed operations (the monitors commit
+    with its ``_job_errors`` and ``_outbox`` sidecars, job_data appends,
+    dispatch log)."""
 
     SCHEMAS = {
         "monitors": schemas.MONITORS,
         "job_data": schemas.JOB_DATA,
         "job_errors": schemas.JOB_ERRORS,
+        "_outbox": schemas.ALERT_OUTBOX,
         "applications": schemas.APPLICATIONS,
         "users": schemas.USERS,
     }
+    # tables committed inside the monitors version -> their sidecar dir
+    SIDECARS = {"job_errors": "_job_errors", "_outbox": "_outbox"}
+
+    def current_version(self, table: str) -> tuple[int, Path | None]:
+        """A sidecar table's version is the monitors version holding it;
+        without the sidecar (an older store), the table's own."""
+        sub = self.SIDECARS.get(table)
+        if sub is not None:
+            version, path = super().current_version("monitors")
+            if path is not None and (path / sub).exists():
+                return version, path / sub
+        return super().current_version(table)
 
     def read(self, table: str) -> DataFrame:
         return self.read_table(table, self.SCHEMAS[table])
@@ -393,15 +413,35 @@ class JobStore(VersionedParquetTables):
     def read_rows(self, table: str) -> list[dict]:
         """A config table's current rows on the driver, read with pyarrow;
         equal to ``[r.asDict() for r in read(table).collect()]``.
-        ``"_outbox"`` names the current monitors version's alert outbox.
         ``job_data`` is fact-scale and stays a Spark read."""
         if table == "job_data":
             raise ValueError("job_data is fact-scale: read it with read()")
-        if table == "_outbox":
-            _, path = self.current_version("monitors")
-            return _read_rows(path / "_outbox" if path else None, schemas.ALERT_OUTBOX)
-        _, path = self.current_version(table)
-        return _read_rows(path, self.SCHEMAS[table])
+        return _read_rows(self.current_version(table)[1], self.SCHEMAS[table])
+
+    def overwrite(
+        self,
+        table: str,
+        df: DataFrame | pa.Table,
+        expect_version: int | None = None,
+        sidecars: dict[str, DataFrame | pa.Table] | None = None,
+    ) -> int:
+        """As :meth:`VersionedParquetTables.overwrite`. Writing
+        ``job_errors`` commits a new monitors version with the current
+        monitor rows. A monitors commit carries forward each sidecar it
+        is not given: the current ``_job_errors``, and the ``_outbox``
+        rows not yet dispatched."""
+        if table == "job_errors":
+            sidecars = {"_job_errors": df}
+            table, df = "monitors", to_arrow(self.read_rows("monitors"), schemas.MONITORS)
+        if table == "monitors":
+            sidecars = dict(sidecars or {})
+            if "_job_errors" not in sidecars:
+                sidecars["_job_errors"] = to_arrow(
+                    self.read_rows("job_errors"), schemas.JOB_ERRORS
+                )
+            if "_outbox" not in sidecars:
+                sidecars["_outbox"] = to_arrow(self._pending(), schemas.ALERT_OUTBOX)
+        return super().overwrite(table, df, expect_version, sidecars)
 
     # -- typed operations ---------------------------------------------------
 
@@ -409,12 +449,14 @@ class JobStore(VersionedParquetTables):
         self,
         df: DataFrame | pa.Table,
         expect_version: int | None = None,
-        outbox: list[dict] | DataFrame | None = None,
+        outbox: list[dict] | None = None,
+        job_errors: list[dict] | None = None,
     ) -> int:
-        """Swap the monitors table; when ``outbox`` is given, its rows are
-        committed in the SAME pointer flip (sidecar ``_outbox``) — the
-        status transitions and the alerts they owe become visible
-        atomically together.
+        """Commit a monitors version: the monitor rows, the ``job_errors``
+        rows (the current ones when ``job_errors`` is None) and the
+        ``outbox`` rows, all in ONE pointer flip — status transitions,
+        incidents and the alerts they owe become visible atomically
+        together.
 
         Still-undispatched rows from the PREVIOUS version's outbox are
         always carried forward into the new sidecar (union, deduped by
@@ -422,20 +464,14 @@ class JobStore(VersionedParquetTables):
         crash and the next tick's opening drain — e.g. a user registering
         a monitor — would silently discard the owed alerts, and the
         at-least-once guarantee would hold only if the scheduler were the
-        sole writer (ADVICE r04 #2). The outbox is alert-scale, so it is
-        merged and written on the driver; a DataFrame ``outbox`` is
-        collected first."""
+        sole writer (ADVICE r04 #2)."""
         owed = {r["id"]: r for r in self._pending()}
-        if isinstance(outbox, DataFrame):
-            outbox = [r.asDict() for r in outbox.collect()]
         for r in outbox or ():
             owed.setdefault(r["id"], r)
-        sidecars = (
-            {"_outbox": to_arrow(list(owed.values()), schemas.ALERT_OUTBOX)}
-            if owed
-            else None
-        )
-        return self.overwrite("monitors", df, expect_version, sidecars=sidecars)
+        sidecars = {"_outbox": to_arrow(list(owed.values()), schemas.ALERT_OUTBOX)}
+        if job_errors is not None:
+            sidecars["_job_errors"] = to_arrow(job_errors, schemas.JOB_ERRORS)
+        return self.overwrite("monitors", df, expect_version, sidecars)
 
     def pending_alerts(self) -> list[dict]:
         """Outbox rows not yet marked dispatched, oldest first."""
@@ -489,16 +525,3 @@ class JobStore(VersionedParquetTables):
             ).alias("data"),
         )
         self.append("job_data", rows)
-
-    def latest_job_data(self) -> DataFrame:
-        """R8 — latest result per job via row_number window."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        w = Window.partitionBy("job_id").orderBy(F.col("updated_at").desc(), F.col("id").desc())
-        return (
-            self.read("job_data")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )

@@ -252,7 +252,7 @@ def monitor_lifecycle_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     notifier seam after the outbox drain, so the CAS/outbox/dispatch-log
     plumbing is on the hashed path too. Six ticks is the floor that
     shows the full pattern at the driver's sf0.01 (each tick runs the
-    real store machinery — two versioned swaps + appends — so tick count
+    real store machinery — a versioned swap + appends — so tick count
     is the gate's cost knob; the longer recover->re-open tail is covered
     by the scheduler unit tests)."""
     import shutil

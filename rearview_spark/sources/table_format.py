@@ -17,11 +17,12 @@ three were built bespoke on parquet because transactional-format jars
    (``operators/dedup.py``, ``operators/similarity.py``).
 
 :class:`TableFormat` is the shared contract; :class:`ParquetTableFormat`
-is the in-sandbox implementation (delegating to the same
-``VersionedParquetTables`` core every JobStore crash/replay test
-exercises); :class:`DeltaTableFormat` is the deployment implementation —
-THE one place the Delta swap is documented, so individual operators
-don't each carry a "Delta would do this" note:
+is its implementation (delegating to the same ``VersionedParquetTables``
+core every JobStore crash/replay test exercises). The table below is THE
+one place the mapping onto Delta Lake is documented, so individual
+operators don't each carry a "Delta would do this" note. A Delta
+implementation needs the ``delta-spark`` package and jars, which this
+project does not depend on:
 
 ==================  ==============================  =======================
 contract            parquet mechanism               Delta mechanism
@@ -54,7 +55,6 @@ from rearview_spark.monitors.store import (
 __all__ = [
     "TableFormat",
     "ParquetTableFormat",
-    "DeltaTableFormat",
     "ConcurrentWriteError",
 ]
 
@@ -170,113 +170,3 @@ class ParquetTableFormat(TableFormat):
             f"{table_dir}/v={batch_id}"
         )
 
-
-class DeltaTableFormat(TableFormat):
-    """Deployment implementation on Delta Lake — a thin mapping of the
-    same contract onto Delta's transaction log. Requires the
-    ``delta-spark`` package + jars (``spark.sql.extensions`` /
-    ``spark.sql.catalog.spark_catalog`` configured per Delta docs),
-    which this container does not ship; construction fails with
-    ``ImportError`` otherwise, and the unit suite importorskips it.
-
-    Contract mapping (the module-docstring table, made concrete):
-
-    - ``overwrite`` CAS: Delta's optimistic concurrency — a conflicting
-      commit raises ``ConcurrentModificationException``, surfaced as
-      :class:`ConcurrentWriteError`; no claim files needed.
-    - ``merge_snapshot``: a real ``MERGE INTO`` (or overwrite of the
-      merged plan) committed with ``txnAppId``/``txnVersion`` set to
-      (table, batch_id) — Delta itself drops the replayed batch, which
-      replaces the parquet impl's read-below-N re-derivation.
-    - ``append``: transactional append; same ``partitionBy`` layout, so
-      the dedup stores' partition-pruned probes keep working unchanged.
-    - The snapshot isolation the parquet core gets from keeping the
-      previous version directory comes free from Delta time travel.
-    """
-
-    def __init__(self, spark: SparkSession, root: str):
-        from delta.tables import DeltaTable  # noqa: F401  (jar probe)
-
-        self.spark = spark
-        self.root = str(root)
-
-    def _path(self, table: str) -> str:
-        return f"{self.root.rstrip('/')}/{table}"
-
-    def _exists(self, table: str) -> bool:
-        from delta.tables import DeltaTable
-
-        return DeltaTable.isDeltaTable(self.spark, self._path(table))
-
-    def read(self, table: str, schema=None) -> DataFrame:
-        if not self._exists(table):
-            if schema is None:
-                raise ValueError(
-                    f"{table}: never written and no schema given for the empty frame"
-                )
-            return self.spark.createDataFrame([], schema)
-        return self.spark.read.format("delta").load(self._path(table))
-
-    def append(self, table: str, df: DataFrame, partition_by: tuple = ()) -> None:
-        w = df.write.format("delta").mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(self._path(table))
-
-    def overwrite(
-        self, table: str, df: DataFrame, expect_version: int | None = None
-    ) -> int:
-        from delta.tables import DeltaTable
-
-        if expect_version is not None:
-            cur = self.current_version(table)
-            if cur != expect_version:
-                raise ConcurrentWriteError(
-                    f"{table}: version moved {expect_version} -> {cur}"
-                )
-        try:
-            df.write.format("delta").mode("overwrite").save(self._path(table))
-        except Exception as exc:  # Delta's optimistic-concurrency conflicts
-            if "ConcurrentModification" in type(exc).__name__ or (
-                "Concurrent" in str(exc)
-            ):
-                raise ConcurrentWriteError(str(exc)) from exc
-            raise
-        return DeltaTable.forPath(self.spark, self._path(table)).history(1).collect()[
-            0
-        ]["version"]
-
-    def current_version(self, table: str) -> int:
-        from delta.tables import DeltaTable
-
-        if not self._exists(table):
-            return 0
-        return (
-            DeltaTable.forPath(self.spark, self._path(table))
-            .history(1)
-            .collect()[0]["version"]
-        )
-
-    def merge_snapshot(
-        self,
-        table: str,
-        batch_id: int,
-        updates: DataFrame,
-        merge_fn: Callable[[DataFrame | None, DataFrame], DataFrame],
-    ) -> None:
-        history = (
-            self.spark.read.format("delta").load(self._path(table))
-            if self._exists(table)
-            else None
-        )
-        (
-            merge_fn(history, updates)
-            .write.format("delta")
-            .mode("overwrite")
-            # Delta drops a replayed (appId, version) commit — the
-            # at-least-once idempotence the parquet impl gets from its
-            # read-below-N versioned dirs
-            .option("txnAppId", f"merge_snapshot:{table}")
-            .option("txnVersion", str(batch_id))
-            .save(self._path(table))
-        )

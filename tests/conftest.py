@@ -50,6 +50,8 @@ SLOW_TESTS = {
     "test_incremental_embedding.py::test_foreach_batch_streaming_cycle_with_compaction",  # 16.8s
     "test_joins.py::test_edit_distance_join_matches_brute_force",  # 14.8s
     "test_monitors.py::test_alert_outbox_survives_crash_between_cas_and_dispatch",  # 11.3s
+    "test_monitors.py::test_crash_after_recovery_commit_resolves_the_incident",  # 9.2s (fixture)
+    "test_monitors.py::test_crash_after_recovery_commit_keeps_its_job_data_row",  # shares it
     "test_monitors.py::test_outbox_carried_forward_across_unrelated_saves",  # 6.5s
     "test_monitors.py::test_overlapping_ticks_exactly_once",  # 6.6s
     "test_monitors.py::test_scheduler_fire_debounce_realert_recover",  # 17.1s

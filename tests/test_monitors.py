@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rearview_spark.monitors.cron import next_fire
+from rearview_spark.monitors.dashboard import latest_result_per_job
 from rearview_spark.monitors.evaluate import MonitorSpec, evaluate_monitors, evaluate_expr
 from rearview_spark.monitors.lifecycle import transition
 from rearview_spark.monitors.notify import AlertRouter, CollectingNotifier
@@ -320,7 +321,7 @@ def test_scheduler_fire_debounce_realert_recover(spark, store):
 
     # job_data accumulated one row per tick
     assert store.read("job_data").count() == 4
-    latest = store.latest_job_data().collect()
+    latest = latest_result_per_job(store.read("job_data")).collect()
     assert len(latest) == 1 and latest[0]["data"]["status"] == "success"
 
 
@@ -477,6 +478,115 @@ def test_alert_outbox_survives_crash_between_cas_and_dispatch(spark, tmp_path):
     assert len(collector.sent) == 1
 
 
+def _recovery_run(spark, root: str, crash: bool) -> dict:
+    """One monitor fails at 60 min and recovers at 200 min; ticks at 60,
+    200, 201 and 202. With ``crash``, the process dies in the job_data
+    append of the recovering tick — the first step after its commit — and
+    a fresh store and scheduler run the last two ticks."""
+    m = make_metrics(spark, {"stats.req": [200.0] * 120 + [10.0] * 120})
+    st = JobStore(spark, root)
+    st.save_monitors(spark.createDataFrame([monitor_row(error_timeout=60)], MONITORS))
+    sched = MonitorScheduler(spark, st, m, AlertRouter(default=CollectingNotifier()))
+    sched.tick(T0 + dt.timedelta(minutes=60))
+    recovers = T0 + dt.timedelta(minutes=200)
+    if crash:
+        def dying_append(run_results, now):
+            raise RuntimeError("simulated SIGKILL after the commit")
+
+        st.append_job_data = dying_append
+        with pytest.raises(RuntimeError, match="simulated SIGKILL"):
+            sched.tick(recovers)
+        st = JobStore(spark, root)
+        sched = MonitorScheduler(spark, st, m, AlertRouter(default=CollectingNotifier()))
+    else:
+        sched.tick(recovers)
+    for minute in (201, 202):
+        sched.tick(T0 + dt.timedelta(minutes=minute))
+    return {
+        "monitors": st.read_rows("monitors"),
+        "job_errors": st.read_rows("job_errors"),
+        "pending": st.pending_alerts(),
+        "job_data": sorted((r["job_id"], r["created_at"]) for r in st.read("job_data").collect()),
+    }
+
+
+@pytest.fixture(scope="module")
+def recovery_runs(spark, tmp_path_factory):
+    """(crash-free run, run that crashed after the recovering commit)."""
+    root = tmp_path_factory.mktemp("recovery")
+    return (
+        _recovery_run(spark, str(root / "clean"), crash=False),
+        _recovery_run(spark, str(root / "crashed"), crash=True),
+    )
+
+
+def test_crash_after_recovery_commit_resolves_the_incident(recovery_runs):
+    """A crash right after the tick where a monitor recovers must not
+    leave its incident ``triggered`` while the monitor reads ``success``:
+    the incident close rides the same commit as the status change."""
+    clean, crashed = recovery_runs
+    assert [r["status"] for r in clean["job_errors"]] == ["resolved"]
+    assert [r["status"] for r in clean["monitors"]] == ["success"]
+    assert clean["pending"] == []
+    for table in ("monitors", "job_errors", "pending"):
+        assert crashed[table] == clean[table], table
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="ROADMAP item 4: a crash in the job_data append loses that tick's "
+    "row for good, because the commit already advanced next_run",
+)
+def test_crash_after_recovery_commit_keeps_its_job_data_row(recovery_runs):
+    clean, crashed = recovery_runs
+    assert len(clean["job_data"]) == 4
+    assert crashed["job_data"] == clean["job_data"]
+
+
+def test_tick_commits_once(spark, tmp_path, monkeypatch):
+    """A tick takes one claim and flips one CURRENT pointer: the monitor
+    rows, job_errors and the outbox are one monitors version, and no
+    job_errors version chain appears in the store."""
+    import os
+
+    claims: list[str] = []
+    flips: list[str] = []
+
+    class CountingStore(JobStore):
+        def _claim(self, table, *args):
+            claims.append(table)
+            return super()._claim(table, *args)
+
+    real_replace = os.replace
+
+    def counting_replace(src, dst):
+        if str(dst).endswith(".CURRENT"):
+            flips.append(os.path.basename(dst))
+        return real_replace(src, dst)
+
+    root = tmp_path / "one_commit"
+    st = CountingStore(spark, str(root))
+    st.save_monitors(spark.createDataFrame([monitor_row()], MONITORS))
+    m = make_metrics(spark, {"stats.req": [200.0] * 120})
+    sched = MonitorScheduler(spark, st, m, AlertRouter(default=CollectingNotifier()))
+    claims.clear()
+    monkeypatch.setattr(os, "replace", counting_replace)
+    assert sched.tick(NOW) == {"ran": 1, "alerts": 1}
+    monkeypatch.undo()
+
+    assert claims == ["monitors"]
+    assert flips == ["monitors.CURRENT"]
+    assert sorted(p.name for p in root.iterdir()) == [
+        "alert_dispatches", "job_data", "monitors.CURRENT", "monitors.versions",
+    ]
+    version, version_dir = st.current_version("monitors")
+    assert version == 2
+    assert sorted(p.name for p in version_dir.iterdir() if p.name.startswith("_")) == [
+        "_job_errors", "_outbox",
+    ]
+    assert [r["status"] for r in st.read_rows("job_errors")] == ["triggered"]
+
+
 def test_store_reclaims_stale_claim_after_hard_crash(spark, tmp_path):
     """ADVICE r03 (medium): a hard crash between claim creation and the
     pointer swap must not wedge the table forever. A claim older than the
@@ -613,34 +723,66 @@ def test_claim_fencing_aborts_stalled_writer(spark, tmp_path):
 
 
 def test_outbox_carried_forward_across_unrelated_saves(spark, tmp_path):
-    """ADVICE r04 (medium): undispatched outbox rows must survive a
-    save_monitors call that carries no outbox (e.g. a user registering a
-    monitor between a crash and the next tick's opening drain)."""
-    from rearview_spark.monitors.schemas import ALERT_OUTBOX
-
+    """ADVICE r04 (medium): undispatched outbox rows and open incidents
+    must survive a commit that carries neither (e.g. a user registering a
+    monitor between a crash and the next tick's opening drain), whether
+    it is a save_monitors call or a plain overwrite of the monitors."""
     st = JobStore(spark, str(tmp_path / "carry_store"))
     mons = spark.createDataFrame([monitor_row(id=1)], MONITORS)
-    owed = spark.createDataFrame(
-        [(11, 1, ["email:ops@example.com"], "boom", "failed", T0)], ALERT_OUTBOX
-    )
+    owed = {
+        "id": 11, "job_id": 1, "alert_keys": ["email:ops@example.com"],
+        "message": "boom", "status": "failed", "fired_at": T0,
+    }
+    incident = {
+        "id": 1, "job_id": 1, "created_at": T0, "updated_at": T0,
+        "message": "boom", "status": "triggered", "last_alerted_at": T0,
+    }
     st.save_monitors(mons)
-    st.save_monitors(mons, expect_version=1, outbox=owed)
-    # unrelated config write WITHOUT outbox= — must not discard the alert
+    st.save_monitors(mons, expect_version=1, outbox=[owed], job_errors=[incident])
+    # unrelated config writes WITHOUT outbox= — must not discard the alert
+    # or the incident
     st.save_monitors(mons, expect_version=2)
     assert [r["id"] for r in st.pending_alerts()] == [11]
+    assert st.read_rows("job_errors") == [incident]
+    st.overwrite("monitors", mons, expect_version=3)
+    assert [r["id"] for r in st.pending_alerts()] == [11]
+    assert st.read_rows("job_errors") == [incident]
     # a later save with NEW outbox rows unions (deduped by id)
-    owed2 = spark.createDataFrame(
-        [(11, 1, ["email:ops@example.com"], "boom", "failed", T0),
-         (12, 1, ["email:ops@example.com"], "still down", "failed", NOW)],
-        ALERT_OUTBOX,
-    )
-    st.save_monitors(mons, expect_version=3, outbox=owed2)
+    owed2 = [owed, {**owed, "id": 12, "message": "still down", "fired_at": NOW}]
+    st.save_monitors(mons, expect_version=4, outbox=owed2)
     assert sorted(r["id"] for r in st.pending_alerts()) == [11, 12]
     # dispatched rows stop being carried
     st.mark_alert_dispatched(11, NOW)
     st.mark_alert_dispatched(12, NOW)
-    st.save_monitors(mons, expect_version=4)
+    st.save_monitors(mons, expect_version=5)
     assert st.pending_alerts() == []
+    assert st.read_rows("job_errors") == [incident]
+
+
+def test_old_job_errors_table_carried_into_first_commit(spark, tmp_path):
+    """A store written while job_errors had its own version chain (and
+    the monitors versions no ``_job_errors`` sidecar) keeps its incidents:
+    the old table is read until the first commit, which carries it in."""
+    from rearview_spark.monitors.schemas import JOB_ERRORS
+    from rearview_spark.monitors.store import VersionedParquetTables, to_arrow
+
+    root = tmp_path / "old_layout"
+    mons = [dict(zip(MONITORS.fieldNames(), monitor_row(id=1)))]
+    incident = {
+        "id": 1, "job_id": 1, "created_at": T0, "updated_at": T0,
+        "message": "boom", "status": "triggered", "last_alerted_at": T0,
+    }
+    old = VersionedParquetTables(spark, str(root))
+    old.overwrite("monitors", to_arrow(mons, MONITORS))
+    old.overwrite("job_errors", to_arrow([incident], JOB_ERRORS))
+
+    st = JobStore(spark, str(root))
+    assert st.read_rows("job_errors") == [incident]
+    assert st.save_monitors(to_arrow(mons, MONITORS), expect_version=1) == 2
+    _, version_dir = st.current_version("monitors")
+    assert st.current_version("job_errors") == (2, version_dir / "_job_errors")
+    assert st.read_rows("job_errors") == [incident]
+    assert [r.asDict() for r in st.read("job_errors").collect()] == [incident]
 
 
 def test_crash_mid_drain_redelivers_only_the_unsent_alert(spark, store):
@@ -789,9 +931,13 @@ def test_read_rows_equals_spark_collect(spark, tmp_path, writer):
         (1, 1, T0, t1, "boom", "triggered", None),
         (2, 2, T0, T0, None, "resolved", t1),
     ]
-    st.overwrite("monitors", frame(mons, MONITORS), sidecars={"_outbox": frame(owed, ALERT_OUTBOX)})
-    st.overwrite("job_errors", frame(errs, JOB_ERRORS))
+    st.overwrite(
+        "monitors",
+        frame(mons, MONITORS),
+        sidecars={"_outbox": frame(owed, ALERT_OUTBOX), "_job_errors": frame(errs, JOB_ERRORS)},
+    )
     _, version_dir = st.current_version("monitors")
+    assert st.current_version("job_errors") == (1, version_dir / "_job_errors")
     spark_reads = {
         "monitors": st.read("monitors"),
         "job_errors": st.read("job_errors"),

@@ -1,9 +1,8 @@
-"""The transactional-table seam: the contract both implementations
-promise (sources/table_format.py), driven against the in-sandbox
-parquet implementation — whose swap/CAS machinery is the SAME
-VersionedParquetTables core the JobStore crash/replay suite replays,
-so those scenarios verify this interface by construction. The Delta
-implementation importorskips (jars not in this container)."""
+"""The transactional-table seam: the contract (sources/table_format.py),
+driven against the parquet implementation — whose swap/CAS machinery
+is the SAME VersionedParquetTables core the JobStore crash/replay
+suite replays, so those scenarios verify this interface by
+construction."""
 
 from __future__ import annotations
 
@@ -98,11 +97,3 @@ def test_scd2_foreach_batch_routes_through_seam(spark, tmp_path):
     )
     assert rows2 == rows
 
-
-def test_delta_format_contract():
-    """Thin deployment class: constructible only where delta-spark is
-    installed. In this container the import fails and the mapping is
-    documentation — the skip records that honestly."""
-    pytest.importorskip("delta")
-    # construction + contract smoke would run on a Delta-enabled session
-    from rearview_spark.sources.table_format import DeltaTableFormat  # noqa: F401
